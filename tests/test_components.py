@@ -3,6 +3,8 @@ graph shapes (the oracle test covers the minhash-fed path; these cover the
 algorithm itself, where hash-min alone would be slow or a naive impl wrong).
 """
 
+import logging
+
 import pytest
 
 from vectordb_data_ingestion_spark.operators.dedup import (
@@ -34,6 +36,32 @@ def test_path_graph_converges_logarithmically(spark):
     rows = connected_components(df, max_iterations=10).collect()
     assert {r["component"] for r in rows} == {0}
     assert len(rows) == n + 1
+
+
+def test_unconverged_run_logs_a_warning(spark, caplog):
+    # one round cannot settle a 64-edge path: the partial labels come back
+    # and the early stop is logged, not silent
+    edges = [(i, i + 1) for i in range(64)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    with caplog.at_level(
+        logging.WARNING, logger="vectordb_data_ingestion_spark.operators.dedup"
+    ):
+        rows = connected_components(df, max_iterations=1).collect()
+    assert len(rows) == 65
+    assert {r["component"] for r in rows} != {0}
+    assert any(
+        "no convergence confirmed within max_iterations=1" in r.getMessage()
+        for r in caplog.records
+    )
+
+
+def test_converged_run_logs_no_warning(spark, caplog):
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with caplog.at_level(
+        logging.WARNING, logger="vectordb_data_ingestion_spark.operators.dedup"
+    ):
+        connected_components(df).collect()
+    assert not [r for r in caplog.records if r.levelno >= logging.WARNING]
 
 
 def test_transitive_collapse_without_direct_pair(spark):

@@ -212,6 +212,26 @@ def test_bm25_indexed_matches_direct(spark, tmp_path):
     assert direct == indexed and len(direct) > 0
 
 
+def test_bm25_index_counts_a_repeated_id_as_one_document(spark):
+    """Rows sharing an id (of different lengths) form one document: one
+    posting per (term, id) with tf summed and the longest row's dl, and
+    df counts distinct ids - keying postings on dl too inflated df."""
+    from vectordb_data_ingestion_spark.operators.search import build_bm25_index
+
+    docs = spark.createDataFrame(
+        [(1, "vpn reset"), (1, "vpn vpn printer"), (2, "vpn")],
+        "doc_id long, text string",
+    )
+    postings, terms, stats = build_bm25_index(docs)
+    vpn = {
+        r["doc_id"]: (r["tf"], r["dl"])
+        for r in postings.filter("term = 'vpn'").collect()
+    }
+    assert vpn == {1: (3, 3), 2: (1, 1)}
+    df = {r["term"]: r["df"] for r in terms.collect()}
+    assert df["vpn"] == 2 and df["printer"] == 1
+
+
 def test_tfidf_ranks_matching_docs(spark):
     from vectordb_data_ingestion_spark.operators.search import tfidf_topk
 

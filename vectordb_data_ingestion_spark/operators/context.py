@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+SEPARATOR = "\n\n"
+
 
 def build_context(
     hits: DataFrame,
@@ -33,7 +35,7 @@ def build_context(
     url_col: str | None = "url",
     tokens_col: str = "n_tokens",
     score_col: str = "certainty",
-    separator: str = "\n\n",
+    separator: str = SEPARATOR,
 ) -> DataFrame:
     """Per query: join hits to their chunk rows, order best-first (score
     desc, id asc - deterministic), keep the prefix whose running
@@ -88,3 +90,39 @@ def build_context(
             F.sum(tokens_col).cast("bigint").alias("n_tokens")
         )
     return ranked.groupBy(query_id).agg(*aggs)
+
+
+def pack_context(
+    texts: list,
+    urls: list | None,
+    tokens: list | None,
+    max_tokens: int | None,
+    separator: str = SEPARATOR,
+) -> list | None:
+    """Python twin of :func:`build_context` for ONE query whose hits'
+    columns are given best-first (``urls`` / ``tokens`` None when not
+    requested): the output row ``[context, n_chunks[, sources][,
+    n_tokens]]``, or None when there is no hit (the groupBy emits no row).
+    Same budget rule, with SQL NULL semantics: the running total skips
+    NULL token counts, and a NULL running total fails the budget."""
+    if not texts:
+        return None
+    kept, running = [], None
+    for i in range(len(texts)):
+        if tokens is not None:
+            if tokens[i] is not None:
+                running = tokens[i] if running is None else running + tokens[i]
+            # (rank = 1) OR (running <= max_tokens)
+            if i and (running is None or running > max_tokens):
+                continue
+        kept.append(i)
+    row = [
+        separator.join(texts[i] for i in kept if texts[i] is not None),
+        len(kept),
+    ]
+    if urls is not None:
+        row.append([urls[i] for i in kept])
+    if tokens is not None:
+        vals = [tokens[i] for i in kept if tokens[i] is not None]
+        row.append(int(sum(vals)) if vals else None)
+    return row

@@ -523,7 +523,9 @@ def connected_components(
 
     Output has one row per node that appears in ``pairs``; isolated rows of
     the base table are absent (their component is their own id - see
-    :func:`dedup_by_components`).
+    :func:`dedup_by_components`). If ``max_iterations`` rounds pass
+    without convergence, the partial labels are returned and a warning is
+    logged on this module's logger.
     """
     # Checkpoints here are LAZY (eager=False): each round's convergence
     # checksum ``collect`` is the action that materializes them, so the
@@ -611,6 +613,13 @@ def connected_components(
             )
             break
         prev_sum = cur_sum
+    else:
+        _CC_LOG.warning(
+            "connected_components: no convergence confirmed within "
+            "max_iterations=%d rounds; labels may be partial (a node may "
+            "not carry its component's minimum id yet)",
+            max_iterations,
+        )
     return labels
 
 

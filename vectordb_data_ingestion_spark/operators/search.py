@@ -30,7 +30,7 @@ Scale posture (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
@@ -42,6 +42,47 @@ _TOKENS_SQL = (
     "list_filter(string_split(regexp_replace(lower({e}), '[ \\x09-\\x0D]+', ' ', 'g'), "
     "' '), w -> w <> '')"
 )
+
+
+def lexical_tokens(text_col: str) -> Column:
+    """The ONE tokenization every lexical scorer here uses (and the
+    collection facade's driver snapshot reads through Spark itself):
+    lowercased ``word_split`` tokens, empty strings dropped."""
+    return F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+
+
+# Okapi BM25 saturation / length-normalization defaults, shared by every
+# BM25 scorer (distributed, DuckDB oracle, the collection's driver snapshot)
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_weight(n, df, tf, dl, avgdl, log, k1=BM25_K1, b=BM25_B):
+    """BM25 weight of one (term, doc) posting in millionths, unrounded,
+    with Lucene's non-negative idf. Written ONCE for Spark Columns and numpy
+    values alike, so both evaluate the same expression tree: ``log`` is
+    ``F.log`` for Columns, or ``java.lang.StrictMath.log`` (what Spark's
+    ``log`` calls; Python's ``math.log`` differs by 1 ulp on ~2% of
+    inputs) for numpy."""
+    idf = log(1.0 + (n - df + 0.5) / (df + 0.5))
+    denom = tf + k1 * (1.0 - b + b * dl / avgdl)
+    return idf * (tf * (k1 + 1.0)) / denom * 1e6
+
+
+def rrf_weight(weight, rank, k_rrf):
+    """One list's reciprocal-rank contribution in millionths, unrounded
+    (Columns or numpy values, like :func:`bm25_weight`)."""
+    return weight * 1e6 / (k_rrf + rank)
+
+
+def round_half_up(x):
+    """numpy twin of ``F.round(x).cast("long")`` on doubles (scale 0,
+    HALF_UP), as int64 - the rounding of every micro-score here."""
+    import numpy as np
+
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x).astype(np.int64)
 
 
 def _norm_queries(
@@ -63,8 +104,8 @@ def bm25_topk(
     corpus: DataFrame,
     queries: list[tuple[int, list[str]]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -94,8 +135,8 @@ def bm25_sql(
     table: str,
     queries: list[tuple[int, list[str]]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
@@ -175,7 +216,7 @@ def rrf_fuse(
     )
     joined = fa.join(fb, [query_col, id_col], "full_outer")
     contrib = lambda r, wt: F.coalesce(  # noqa: E731
-        F.round(F.lit(wt) * 1e6 / (F.lit(k_rrf) + F.col(r))).cast("long"),
+        F.round(rrf_weight(F.lit(wt), F.col(r), F.lit(k_rrf))).cast("long"),
         F.lit(0).cast("long"),
     )
     scored = joined.select(
@@ -341,23 +382,30 @@ def build_bm25_index(
 
     ``term_filter`` restricts postings/terms to the given term set while
     keeping corpus-wide stats — the ad-hoc (:func:`bm25_topk`) shape,
-    where only query terms survive to the groupBy."""
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    where only query terms survive to the groupBy.
+
+    A document is an id: ``df`` counts distinct ids per term, and rows
+    repeating an id contribute to one posting. ``stats`` stay per row
+    (``n`` counts rows, ``avgdl`` averages their lengths)."""
+    toks = lexical_tokens(text_col)
     docs = corpus.select(
         F.col(id_col), F.size(toks).alias("dl"), toks.alias("__toks")
     )
     exploded = docs.select(id_col, "dl", F.explode("__toks").alias("term"))
     if term_filter is not None:
         exploded = exploded.filter(F.col("term").isin(term_filter))
+    # keyed by (term, id) alone: rows sharing an id are ONE document (tf
+    # summed over them, dl their longest matching row), so postings hold
+    # exactly one row per (term, doc) even when ids repeat. Keying on dl
+    # too split a repeated id into several postings and inflated df.
     postings = (
         exploded
-        .groupBy("term", id_col, "dl")
-        .agg(F.count("*").alias("tf"))
+        .groupBy("term", id_col)
+        .agg(F.max("dl").alias("dl"), F.count("*").alias("tf"))
     )
-    # postings is one row per (term, doc) by construction (the groupBy
-    # above; dl is functionally dependent on the doc), so a plain count
-    # IS the distinct doc count — count_distinct would plan an extra
-    # dedup aggregation phase for nothing (r11)
+    # one posting per (term, doc), so a plain count IS the distinct doc
+    # count — count_distinct would plan an extra dedup aggregation phase
+    # for nothing (r11)
     terms = postings.groupBy("term").agg(
         F.count("*").alias("df")
     )
@@ -371,8 +419,8 @@ def bm25_topk_indexed(
     stats: DataFrame,
     queries: list[tuple[int, list[str]]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Identical results to :func:`bm25_topk`, served from the materialized
@@ -389,12 +437,9 @@ def bm25_topk_indexed(
         [(qid, t) for qid, qterms in queries for t in sorted(set(qterms))],
         "q_id long, term string",
     )
-    idf = F.log(
-        1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
     term_micro = F.round(
-        idf * (F.col("tf") * (k1 + 1.0)) / denom * 1e6
+        bm25_weight(*map(F.col, ("n", "df", "tf", "dl", "avgdl")), F.log,
+                    k1=k1, b=b)
     ).cast("long")
     agg = (
         postings.join(broadcast(qdf), "term")
@@ -436,7 +481,7 @@ def doc_postings(
     """Postings rows for a (micro-)batch of documents - the transform an
     incremental index refresh runs per batch (same tokenization as
     :func:`build_bm25_index`)."""
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    toks = lexical_tokens(text_col)
     return (
         corpus.select(F.col(id_col), F.size(toks).alias("dl"),
                       F.explode(toks).alias("term"))
@@ -473,7 +518,7 @@ def tfidf_topk(
     before the final sum - no float-summation-order ties against the
     oracle (same convention as :func:`bm25_topk`)."""
     queries = _norm_queries(queries)
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    toks = lexical_tokens(text_col)
     docs = corpus.select(F.col(id_col), toks.alias("__toks"))
     n_docs = docs.agg(F.count("*").alias("__n"))
 

@@ -74,6 +74,47 @@ def topk_by_certainty(
     )
 
 
+def certainty_scores(m, norms, qm):
+    """The dense certainty kernel: ``(rows x queries)`` certainty
+    ``(1+cos)/2`` of every row of ``m`` (row L2 norms ``norms``) against
+    every query row of ``qm``, rounded to 6 places.
+
+    ONE implementation serves both the distributed
+    :func:`topk_by_certainty_vectorized` (per Arrow batch) and the
+    collection facade's driver snapshot (whole corpus at once), so the two
+    agree bit for bit. JVM parity on degenerate vectors:
+    ``cosine_similarity`` returns NULL when either norm is 0 and the
+    threshold filter drops NULL, so a zero-norm row or query scores NaN
+    here - it never passes a threshold and never ranks (scoring it 0.5
+    would displace real neighbors)."""
+    import numpy as np
+
+    qn = np.linalg.norm(qm, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cert = np.round((1.0 + (m @ qm.T) / np.outer(norms, qn)) / 2.0, 6)
+    cert[norms == 0, :] = np.nan
+    cert[:, qn == 0] = np.nan
+    return cert
+
+
+def topk_rows(values, ids, k: int, threshold: float):
+    """Positions of the best ``k`` entries of the 1-d ``values`` meeting
+    ``threshold``, best first in the distributed windows' order (value
+    desc, id asc). NaN never passes. ``ids`` may hold any comparable id
+    type (int or string)."""
+    import numpy as np
+
+    idx = np.flatnonzero(values >= threshold)
+    if k <= 0:
+        return idx[:0]
+    if len(idx) > k:
+        # everything tied with the k-th best survives to the id tie-break
+        kth = -np.partition(-values[idx], k - 1)[k - 1]
+        idx = idx[values[idx] >= kth]
+    best = sorted(idx.tolist(), key=lambda i: (-values[i], ids[i]))[:k]
+    return np.asarray(best, dtype=np.intp)
+
+
 def topk_by_certainty_vectorized(
     corpus: DataFrame,
     query_rows: list[tuple],
@@ -89,9 +130,10 @@ def topk_by_certainty_vectorized(
 
     ``query_rows`` is a small list of ``(q_id, vector)`` - it ships inside
     the UDF closure (the broadcast side). Each partition emits only its
-    local top-k per query; the final exact top-k merges
-    ``partitions x k`` candidates through the same window, so the
-    shuffle input is tiny regardless of corpus size."""
+    local top-k per query (:func:`certainty_scores` +
+    :func:`topk_rows` per batch, merged across batches); the
+    final exact top-k merges ``partitions x k`` candidates through the
+    same window, so the shuffle input is tiny regardless of corpus size."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -104,13 +146,6 @@ def topk_by_certainty_vectorized(
 
     q_ids = [q for q, _ in query_rows]
     qm = np.asarray([v for _, v in query_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    # JVM parity on degenerate vectors: cosine_similarity returns NULL
-    # when either norm is 0 and the threshold filter drops NULL, so a
-    # zero-norm QUERY matches nothing and zero-norm CORPUS rows never
-    # rank (scoring them 0.5 would displace real neighbors).
-    q_zero = qn == 0
-    qn[q_zero] = 1.0
 
     # Preserve id dtypes instead of assuming bigint: the collection facade
     # routes arbitrary (string/UUID) chunk ids through here, exactly like
@@ -126,53 +161,27 @@ def topk_by_certainty_vectorized(
         ]
     )
 
-    class _RevId:
-        """Inverts id ordering inside the min-heap so the heap root is the
-        WORST candidate (lowest certainty, then highest id) for any
-        comparable id type — numeric or string — replacing the old
-        ``-int(id)`` trick that crashed on non-numeric ids."""
-
-        __slots__ = ("v",)
-
-        def __init__(self, v):
-            self.v = v
-
-        def __lt__(self, other):
-            return self.v > other.v
-
-        def __eq__(self, other):
-            return self.v == other.v
-
     def score(batches):
-        import heapq
-
-        heaps: dict = {q: [] for q in q_ids}
+        # per query: the partition's running top-k as (ids, certainties)
+        best = {j: None for j in range(len(q_ids))}
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = pdf[corpus_id].to_numpy()
             m = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            nonzero = norms != 0
-            if not nonzero.all():
-                ids, m, norms = ids[nonzero], m[nonzero], norms[nonzero]
-            if not len(ids):
-                continue
-            cert = np.round((1.0 + (m @ qm.T) / np.outer(norms, qn)) / 2.0, 6)
-            for j, q in enumerate(q_ids):
-                if q_zero[j]:
-                    continue
-                col = cert[:, j]
-                keep = col >= threshold
-                for cid, cv in zip(ids[keep], col[keep]):
-                    item = (cv, _RevId(cid))
-                    h = heaps[q]
-                    if len(h) < k:
-                        heapq.heappush(h, item)
-                    elif item > h[0]:
-                        heapq.heapreplace(h, item)
+            cert = certainty_scores(m, np.linalg.norm(m, axis=1), qm)
+            for j in best:
+                cids, cvals = ids, cert[:, j]
+                if best[j] is not None:
+                    cids = np.concatenate([best[j][0], cids])
+                    cvals = np.concatenate([best[j][1], cvals])
+                keep = topk_rows(cvals, cids, k, threshold)
+                best[j] = (cids[keep], cvals[keep])
         rows = [
-            (q, rid.v, cv) for q, h in heaps.items() for cv, rid in h
+            (q_ids[j], cid, cv)
+            for j, hit in best.items()
+            if hit is not None
+            for cid, cv in zip(*hit)
         ]
         yield pd.DataFrame(rows, columns=["q_id", corpus_id, "certainty"])
 
